@@ -6,14 +6,43 @@ import scala.collection.mutable
   * `isTwoBytes` derives from the first codespacerange hex length (1 byte -> false,
   * 2 -> true, else panic — cmap.rs:41-45). Values are single UTF-16 code units; an
   * unpaired surrogate panics exactly like Rust `char::decode_utf16` (cmap.rs:74).
+  *
+  * Lookups read `table`, one unboxed char per code (grown to the largest code
+  * stored, at most 65,536 entries), where a surrogate marks a missing code. The
+  * two mappings a char slot cannot hold live in `overflow`: codes past 0xFFFF
+  * (an array-form bfrange running off the end) and the surrogate values an
+  * incrementing bfrange produces when its destination wraps past 0xFFFF (the
+  * surrogate check sees the unwrapped code). Both are empty on real CMaps.
   */
-final case class ToUnicodeCMap(
-    beginCodeSpaceRange: Array[Byte],
-    endCodeSpaceRange: Array[Byte],
-    isTwoBytes: Boolean,
-    cmap: Map[Int, Char]
-)
+final class ToUnicodeCMap(
+    val beginCodeSpaceRange: Array[Byte],
+    val endCodeSpaceRange: Array[Byte],
+    val isTwoBytes: Boolean,
+    table: Array[Char],
+    overflow: Map[Int, Char]
+) {
 
+  /** The char `code` maps to, or -1 when the CMap does not map it. */
+  def lookup(code: Int): Int = {
+    if (code < table.length) {
+      val c = table(code)
+      if (!Character.isSurrogate(c)) return c
+    }
+    if (overflow.isEmpty) -1 else overflow.get(code).fold(-1)(_.toInt)
+  }
+
+  /** Every mapping as a map (the `--font` display and the specs). */
+  lazy val cmap: Map[Int, Char] = {
+    val b = Map.newBuilder[Int, Char]
+    var code = 0
+    while (code < table.length) {
+      if (!Character.isSurrogate(table(code))) b += code -> table(code)
+      code += 1
+    }
+    b ++= overflow
+    b.result()
+  }
+}
 object ToUnicodeCMap {
 
   def parse(value: String): ToUnicodeCMap = {
@@ -45,7 +74,18 @@ object ToUnicodeCMap {
       case n => Err.fail(s"Cmap index with byte length $n is not supported")
     }
 
-    val cmap = mutable.HashMap.empty[Int, Char]
+    var table = newTable(0x100)
+    val overflow = mutable.HashMap.empty[Int, Char]
+
+    def put(code: Int, v: Char): Unit =
+      if (code <= 0xffff && !Character.isSurrogate(v)) {
+        if (code >= table.length) table = grow(table, code)
+        table(code) = v
+        if (overflow.nonEmpty) overflow.remove(code)
+      } else {
+        overflow(code) = v
+        if (code < table.length) table(code) = Missing
+      }
 
     def hexKey(x: Array[Byte], what: String): Int = x.length match {
       case 2 => (x(0) & 0xff) * 256 + (x(1) & 0xff)
@@ -82,7 +122,7 @@ object ToUnicodeCMap {
                   case null    => Err.fail("CMap unreadable because end of cmap file is reached")
                   case tk      => Err.fail(s"CMap val should be an hex string, found $tk")
                 }
-                cmap(key) = v
+                put(key, v)
             }
           }
         case b: TBare if bEq(b.bytes, "beginbfrange") =>
@@ -107,7 +147,7 @@ object ToUnicodeCMap {
                     var dst = hexVal(h.bytes)
                     var idx = src1
                     while (idx <= src2) {
-                      cmap(idx) = utf16Char(dst)
+                      put(idx, utf16Char(dst))
                       dst += 1
                       idx += 1
                     }
@@ -119,7 +159,7 @@ object ToUnicodeCMap {
                       tok.next() match {
                         case TArrayEnd => arrDone = true
                         case h: THex =>
-                          cmap(src1 + idx) = utf16Char(hexVal(h.bytes))
+                          put(src1 + idx, utf16Char(hexVal(h.bytes)))
                           idx += 1
                         case null => Err.fail("CMap unreadable because end of cmap file is reached")
                         case tk   => Err.fail(s"CMap range should only contain hex strings, found $tk")
@@ -135,7 +175,26 @@ object ToUnicodeCMap {
       t = tok.next()
     }
 
-    ToUnicodeCMap(begin, end, isTwoBytes, cmap.toMap)
+    new ToUnicodeCMap(begin, end, isTwoBytes, table,
+      if (overflow.isEmpty) Map.empty else overflow.toMap)
+  }
+
+  /** Marks a missing code in the lookup table (parse stores no surrogate there). */
+  private val Missing = '\udfff'
+
+  private def newTable(n: Int): Array[Char] = {
+    val t = new Array[Char](n)
+    java.util.Arrays.fill(t, Missing)
+    t
+  }
+
+  /** `t` grown (by doubling, at most to 0x10000 entries) to hold `code`. */
+  private def grow(t: Array[Char], code: Int): Array[Char] = {
+    var n = t.length
+    while (n <= code) n *= 2
+    val g = newTable(n)
+    System.arraycopy(t, 0, g, 0, t.length)
+    g
   }
 
   private def bEq(a: Array[Byte], s: String): Boolean = {

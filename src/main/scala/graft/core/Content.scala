@@ -462,8 +462,9 @@ object TextAssembly {
                         i += 1
                         c * 256 + second
                       } else c
-                    val ch = cm.cmap.getOrElse(charIdx,
-                      Err.fail(s"CMap does not contain a char with idx $charIdx"))
+                    val mapped = cm.lookup(charIdx)
+                    if (mapped < 0) Err.fail(s"CMap does not contain a char with idx $charIdx")
+                    val ch = mapped.toChar
                     if (displayChar) out.append(charsFormat(ch, font))
                     else out.append(ch)
                     advance(font, c) // width lookup uses the FIRST byte — content.rs:818

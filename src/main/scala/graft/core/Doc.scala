@@ -352,17 +352,27 @@ final case class FontMap(fonts: Map[String, PdfFont]) {
 }
 
 object FontMap {
+  /** body.rs:316-335. Each font is built through its reference's `Ctx.font`
+    * memo, so pages that name the same font object share one `PdfFont`.
+    * Output and errors stay exact: building the same reference from the same
+    * bytes is deterministic, a failed build is never memoized (a second use
+    * throws the same error), and `PdfCatalog.parseAt` builds every page's
+    * fonts before any text is assembled, so a document's first error is
+    * unchanged.
+    */
   def from(dict: Map[String, PdfObj]): FontMap = FontMap(
     dict.map {
       case (key, PRef(obj, gen, ctx)) =>
-        ctx.xref.getAndFix((obj, gen), ctx.bytes) match {
-          case Some(address) =>
-            ObjParser.parseAt(ctx, address) match {
-              case PDict(d) => key -> PdfFont.from(d)
-              case o        => Err.fail(s"Font object is not a dictionary, found $o")
-            }
-          case None =>
-            Err.fail(s"Font dictionnary object associated to $key was not found in xref table")
+        key -> ctx.font(obj, gen) {
+          ctx.xref.getAndFix((obj, gen), ctx.bytes) match {
+            case Some(address) =>
+              ObjParser.parseAt(ctx, address) match {
+                case PDict(d) => PdfFont.from(d)
+                case o        => Err.fail(s"Font object is not a dictionary, found $o")
+              }
+            case None =>
+              Err.fail(s"Font dictionnary object associated to $key was not found in xref table")
+          }
         }
       case _ => Err.fail("Font should be an indirect object")
     }

@@ -2,6 +2,8 @@ package graft.core
 
 import java.util.Arrays
 
+import scala.collection.mutable
+
 /** PDF token — tokenizer.rs:35-51. Byte-payload tokens override equality so ported
   * reference test vectors can assert structurally.
   */
@@ -287,7 +289,10 @@ final class PdfTokenizer(val bytes: Array[Byte], var pos: Int) {
           // though the bytes would otherwise fall through to the bareword
           // path untouched (non-numeric barewords carry raw bytes with no
           // UTF-8 check at all). Found by the 1,500-mutation differential.
-          Utf8.strict(Arrays.copyOfRange(bytes, start, pos))
+          // Every byte after the first is an ASCII digit or '.', so the run
+          // is valid UTF-8 exactly when its first byte is ASCII: only a high
+          // first byte needs the check (which then panics with its wording).
+          if (bytes(start) < 0) Utf8.strict(Arrays.copyOfRange(bytes, start, pos))
         }
         return keywordOrBare(Arrays.copyOfRange(bytes, start, pos))
       }
@@ -484,7 +489,22 @@ final class Lemmatizer(val tok: PdfTokenizer, val ctx: Ctx) {
   */
 final class Ctx(val bytes: Array[Byte], val xref: XRef, val lenient: Boolean = false,
                 val lenientText: Boolean = false,
-                val decrypt: Option[Crypt.Decryptor] = None)
+                val decrypt: Option[Crypt.Decryptor] = None) {
+
+  private val fonts = mutable.HashMap.empty[(Int, Int), PdfFont]
+
+  /** The font at indirect reference (obj, gen) of this context, built by
+    * `build` on first use and then shared by every page that names it, so a
+    * document builds each font (its ToUnicode CMap, its width table) once
+    * instead of once per page. Exact: `build` parses the same immutable bytes
+    * at the same reference, which yields the same font every time; a build
+    * that throws stores nothing, so every later use fails as before. The
+    * memo lives and dies with its `Ctx` (one per document parse, on one
+    * thread); nothing is shared across documents.
+    */
+  def font(obj: Int, gen: Int)(build: => PdfFont): PdfFont =
+    fonts.getOrElseUpdate((obj, gen), build)
+}
 
 object Lemmatizer {
   def apply(bytes: Array[Byte], at: Int, ctx: Ctx): Lemmatizer =

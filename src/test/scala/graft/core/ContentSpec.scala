@@ -2,6 +2,8 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pipeline.MiniPdf
+
 /** Ported from /root/reference/src/content.rs:954-1086 (4 vectors). */
 class ContentSpec extends AnyFunSuite {
 
@@ -67,9 +69,17 @@ class ContentSpec extends AnyFunSuite {
 /** Ported from /root/reference/src/cmap.rs:157-195 (4 vectors). */
 class CMapSpec extends AnyFunSuite {
 
+  private val oneByte =
+    "/CIDInit/ProcSet findresource begin\n12 dict begin\nbegincmap\n/CIDSystemInfo<<\n/Registry (Adobe)\n/Ordering (UCS)\n/Supplement 0\n>> def\n/CMapName/Adobe-Identity-UCS def\n/CMapType 2 def\n1 begincodespacerange\n<00> <FF>\nendcodespacerange\n27 beginbfchar\n<01> <004C>\n<02> <006F>\n<03> <0072>\n<04> <0065>\n<05> <006D>\n<06> <0020>\n<07> <0069>\n<08> <0070>\n<09> <0073>\n<0A> <0075>\n<0B> <0064>\n<0C> <006C>\n<0D> <0074>\n<0E> <0061>\n<0F> <002C>\n<10> <0063>\n<11> <006E>\n<12> <0067>\n<13> <0079>\n<14> <0076>\n<15> <0062>\n<16> <0071>\n<17> <002E>\n<18> <0041>\n<19> <006A>\n<1A> <0053>\n<1B> <006B>\nendbfchar\nendcmap\nCMapName currentdict /CMap defineresource pop\nend\nend\nCMapNam"
+  private val twoByte =
+    "/CIDInit /ProcSet findresource begin\n22 dict begin\nbegincmap\n/CIDSystemInfo\n<< /Registry (Adobe)\n/Ordering (UCS)\n/Supplement 0\n>> def\n/CMapName /Adobe-Identity-UCS def\n/CMapType 2 def\n1 begincodespacerange\n<0000> <FFFF>\nendcodespacerange\n10 beginbfchar\n<0001> <0041>\n<001A> <0042>\n<001C> <0043>\n<0022> <0044>\n<0028> <0045>\n<003E> <0046>\n<0040> <0047>\n<0046> <0048>\n<0049> <0049>\n<005B> <004C>\nendbfchar\n1 beginbfrange\n<0061> <0062> <004D>\nendbfrange\n14 beginbfchar\n<0069> <004F>\n<0084> <0050>\n<0087> <0052>\n<008B> <0053>\n<0093> <0054>\n<0098> <0055>\n<00AB> <0056>\n<00AE> <0057>\n<00B4> <0059>\n<00CD> <0061>\n<00E6> <0062>\n<00E8> <0063>\n<00EE> <0064>\n<00F4> <0065>\nendbfchar\n1 beginbfrange\n<010B> <010C> <0066>\nendbfrange\n5 beginbfchar\n<0113> <0068>\n<0116> <0069>\n<0124> <006A>\n<0127> <006B>\n<012B> <006C>\nendbfchar\n1 beginbfrange\n<0131> <0132> <006D>\nendbfrange\n8 beginbfchar\n<013A> <006F>\n<0155> <0070>\n<0158> <0072>\n<015C> <0073>\n<0165> <0074>\n<016A> <0075>\n<017D> <0076>\n<017F> <0077>\nendbfchar\n1 beginbfrange\n<0184> <0185> <0078>\nendbfrange\n3 beginbfchar\n<018F> <007A>\n<01AF> <00660066>\n<01B1> <00660069>\nendbfchar\n1 beginbfrange\n<034F> <0358> <0030>\nendbfrange\n3 beginbfchar\n<03D9> <0020>\n<03DF> <002E>\n<03E2> <003B>\nendbfchar\n1 beginbfrange\n<03FC> <03FD> <0028>\nendbfrange\n1 beginbfchar\n<042D> <0026>\nendbfchar\nendcmap\nCMapName currentdict /CMap defineresource pop\nend\nend\nCMapNam"
+  private val singleChar =
+    "begincodespacerange\n<0000> <FFFF>\nendcodespacerange\nbeginbfchar\n<03D9> <0020>\nendbfchar"
+  private val rangeForms =
+    "begincodespacerange\n<0000> <FFFF>\nendcodespacerange\nbeginbfrange\n<03DF> <03E0> [<002E> <002C>]\n<03E1> <03E2> <003A>\nendbfrange"
+
   test("one-byte bfchar map (cmap.rs:162-171)") {
-    val s = "/CIDInit/ProcSet findresource begin\n12 dict begin\nbegincmap\n/CIDSystemInfo<<\n/Registry (Adobe)\n/Ordering (UCS)\n/Supplement 0\n>> def\n/CMapName/Adobe-Identity-UCS def\n/CMapType 2 def\n1 begincodespacerange\n<00> <FF>\nendcodespacerange\n27 beginbfchar\n<01> <004C>\n<02> <006F>\n<03> <0072>\n<04> <0065>\n<05> <006D>\n<06> <0020>\n<07> <0069>\n<08> <0070>\n<09> <0073>\n<0A> <0075>\n<0B> <0064>\n<0C> <006C>\n<0D> <0074>\n<0E> <0061>\n<0F> <002C>\n<10> <0063>\n<11> <006E>\n<12> <0067>\n<13> <0079>\n<14> <0076>\n<15> <0062>\n<16> <0071>\n<17> <002E>\n<18> <0041>\n<19> <006A>\n<1A> <0053>\n<1B> <006B>\nendbfchar\nendcmap\nCMapName currentdict /CMap defineresource pop\nend\nend\nCMapNam"
-    val cm = ToUnicodeCMap.parse(s)
+    val cm = ToUnicodeCMap.parse(oneByte)
     assert(!cm.isTwoBytes)
     assert(cm.cmap.get(1) == Some('L'))
     assert(cm.cmap.get(2) == Some('o'))
@@ -79,23 +89,63 @@ class CMapSpec extends AnyFunSuite {
   }
 
   test("two-byte cmap with interleaved blocks (cmap.rs:174-178)") {
-    val s = "/CIDInit /ProcSet findresource begin\n22 dict begin\nbegincmap\n/CIDSystemInfo\n<< /Registry (Adobe)\n/Ordering (UCS)\n/Supplement 0\n>> def\n/CMapName /Adobe-Identity-UCS def\n/CMapType 2 def\n1 begincodespacerange\n<0000> <FFFF>\nendcodespacerange\n10 beginbfchar\n<0001> <0041>\n<001A> <0042>\n<001C> <0043>\n<0022> <0044>\n<0028> <0045>\n<003E> <0046>\n<0040> <0047>\n<0046> <0048>\n<0049> <0049>\n<005B> <004C>\nendbfchar\n1 beginbfrange\n<0061> <0062> <004D>\nendbfrange\n14 beginbfchar\n<0069> <004F>\n<0084> <0050>\n<0087> <0052>\n<008B> <0053>\n<0093> <0054>\n<0098> <0055>\n<00AB> <0056>\n<00AE> <0057>\n<00B4> <0059>\n<00CD> <0061>\n<00E6> <0062>\n<00E8> <0063>\n<00EE> <0064>\n<00F4> <0065>\nendbfchar\n1 beginbfrange\n<010B> <010C> <0066>\nendbfrange\n5 beginbfchar\n<0113> <0068>\n<0116> <0069>\n<0124> <006A>\n<0127> <006B>\n<012B> <006C>\nendbfchar\n1 beginbfrange\n<0131> <0132> <006D>\nendbfrange\n8 beginbfchar\n<013A> <006F>\n<0155> <0070>\n<0158> <0072>\n<015C> <0073>\n<0165> <0074>\n<016A> <0075>\n<017D> <0076>\n<017F> <0077>\nendbfchar\n1 beginbfrange\n<0184> <0185> <0078>\nendbfrange\n3 beginbfchar\n<018F> <007A>\n<01AF> <00660066>\n<01B1> <00660069>\nendbfchar\n1 beginbfrange\n<034F> <0358> <0030>\nendbfrange\n3 beginbfchar\n<03D9> <0020>\n<03DF> <002E>\n<03E2> <003B>\nendbfchar\n1 beginbfrange\n<03FC> <03FD> <0028>\nendbfrange\n1 beginbfchar\n<042D> <0026>\nendbfchar\nendcmap\nCMapName currentdict /CMap defineresource pop\nend\nend\nCMapNam"
-    val cm = ToUnicodeCMap.parse(s)
+    val cm = ToUnicodeCMap.parse(twoByte)
     assert(cm.isTwoBytes)
     assert(cm.cmap.get(1) == Some('A'))
   }
 
   test("single bfchar (cmap.rs:181-185)") {
-    val s = "begincodespacerange\n<0000> <FFFF>\nendcodespacerange\nbeginbfchar\n<03D9> <0020>\nendbfchar"
-    val cm = ToUnicodeCMap.parse(s)
+    val cm = ToUnicodeCMap.parse(singleChar)
     assert(cm.cmap.get(985) == Some(' '))
   }
 
   test("multiple bfrange forms (cmap.rs:188-194)") {
-    val s = "begincodespacerange\n<0000> <FFFF>\nendcodespacerange\nbeginbfrange\n<03DF> <03E0> [<002E> <002C>]\n<03E1> <03E2> <003A>\nendbfrange"
-    val cm = ToUnicodeCMap.parse(s)
+    val cm = ToUnicodeCMap.parse(rangeForms)
     assert(cm.cmap.get(991) == Some('.'))
     assert(cm.cmap.get(992) == Some(','))
     assert(cm.cmap.get(993) == Some(':'))
+  }
+
+  test("lookup table agrees with cmap for every code of the four vectors") {
+    for ((vector, size) <- Seq(oneByte -> 27, twoByte -> 64, singleChar -> 1, rangeForms -> 4)) {
+      val cm = ToUnicodeCMap.parse(vector)
+      assert(cm.cmap.size == size)
+      var code = 0
+      while (code <= 0xffff) {
+        assert(cm.lookup(code) == cm.cmap.get(code).fold(-1)(_.toInt), s"code $code")
+        code += 1
+      }
+    }
+  }
+
+  test("array-form bfrange running past 0xFFFF still parses") {
+    val cm = ToUnicodeCMap.parse(
+      "begincodespacerange\n<0000> <FFFF>\nendcodespacerange\nbeginbfrange\n<FFFE> <FFFF> [<0041> <0042> <0043>]\nendbfrange")
+    assert(cm.lookup(0xfffe) == 'A')
+    assert(cm.lookup(0xffff) == 'B')
+    assert(cm.cmap == Map(0xfffe -> 'A', 0xffff -> 'B', 0x10000 -> 'C'))
+  }
+
+  test("incrementing bfrange whose destination wraps past 0xFFFF keeps the wrapped chars") {
+    // destinations 0xFFFF, 0x10000, ..., 0x1D800: stored as their low 16 bits,
+    // so code 0xD801 maps to the surrogate U+D800
+    val cm = ToUnicodeCMap.parse(
+      "begincodespacerange\n<0000> <FFFF>\nendcodespacerange\nbeginbfrange\n<0000> <D801> <FFFF>\nendbfrange")
+    assert(cm.lookup(0) == 0xffff)
+    assert(cm.lookup(1) == 0)
+    assert(cm.lookup(0xd801) == 0xd800)
+    assert(cm.lookup(0xd802) == -1)
+    assert(cm.cmap.size == 0xd802)
+  }
+
+  test("TJ showing a code the CMap does not map fails with the same error") {
+    val oneByte = MiniPdf.synthesizeWithCMap("BT\n/F1 12 Tf\n[<41> <42>] TJ\nET\n",
+      "1 beginbfchar\n<41> <0061>\nendbfchar")
+    val e1 = intercept[PdfParseException](Pdf(oneByte).extractResult(ExtractText))
+    assert(e1.getMessage == "CMap does not contain a char with idx 66")
+    val twoByte = MiniPdf.synthesizeWithCMap("BT\n/F1 12 Tf\n[<01410142>] TJ\nET\n",
+      "1 beginbfchar\n<0141> <0061>\nendbfchar", twoByte = true)
+    val e2 = intercept[PdfParseException](Pdf(twoByte).extractResult(ExtractText))
+    assert(e2.getMessage == "CMap does not contain a char with idx 322")
   }
 }
