@@ -1,15 +1,18 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.html.HtmlBoilerplate
 
 /** The extraction pipeline — SURVEY §2.10 stages P1-P9.
   *
-  * Plan shape (one wide transformation, one narrow map, one write):
+  * Plan shape (one wide transformation, one narrow map, one observed write):
   *   scan -> filter -> Exchange hashpartitioning(conv_id, salt) ->
-  *   MapPartitions(extractTurn) -> sortWithinPartitions -> write(+manifest)
+  *   MapPartitions(extractTurn) -> CollectMetrics(per-shard rows, bytes) ->
+  *   Sort(shard, conv_id, turn_idx) -> write -> manifests
   *
   * The salted repartition bounds any single conversation's share of a partition at
   * 1/SALT (north rule: "explicit salted repartitioning on conv_id to defeat
@@ -178,12 +181,25 @@ object ExtractJob {
   val io: TableIO = ParquetTableIO
 
   def completedShards(spark: SparkSession, outDir: String): Set[Int] = {
-    if (!io.manifestsExist(outDir)) Set.empty
+    if (!io.manifestsExist(spark, outDir)) Set.empty
     else {
       import spark.implicits._
       io.readManifests(spark, outDir)
         .filter(_.status == "done").map(_.part_id).collect().toSet
     }
+  }
+
+  /** Per-shard rows and chars of `extracted_text` from `(shard, chars)` rows, in
+    * one array (shard k at slots 2k and 2k+1): one update per row however wide
+    * the wave, where an aggregate per shard would run every one on every row.
+    */
+  private final class ShardStats(shards: Int) extends Aggregator[(Int, Int), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](2 * shards)
+    def reduce(b: Array[Long], in: (Int, Int)): Array[Long] = { b(2 * in._1) += 1; b(2 * in._1 + 1) += in._2; b }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = { a.indices.foreach(i => a(i) += b(i)); a }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder()
   }
 
   /** Run extraction with per-shard checkpoint manifests. `shards` counts resume
@@ -192,9 +208,10 @@ object ExtractJob {
     *
     * ONE input scan per wave (default: all remaining shards in a single wave):
     * filter to the remaining shards -> extract -> partitionBy(shard) write with
-    * DYNAMIC partition overwrite -> manifest rows for the wave from one
-    * partition-pruned scan of the just-written output. At 100TB this is 1 input
-    * pass + 1 (much smaller) output pass — never O(shards) input rescans.
+    * DYNAMIC partition overwrite -> manifest rows for the wave. The per-shard
+    * rows and bytes are observed on the write itself (`ShardStats`), so at
+    * 100TB a wave is 1 input pass and no output pass — never O(shards) input
+    * rescans.
     * `waveSize` trades scan count for resume granularity: a crashed wave
     * recommits only its own shards on rerun (its partial directories are
     * dynamically overwritten, committed shards untouched).
@@ -222,27 +239,25 @@ object ExtractJob {
       if (failAtShard >= 0 && committed >= failAtShard)
         throw new RuntimeException(s"injected failure after $committed shards")
       val t0 = System.nanoTime()
-      val waveInput = input.where(shardOf.isin(wave: _*))
-      val out = extract(waveInput, partitions)
+      // per-shard stats observed on the rows the write job emits: observed
+      // aggregates are accumulator updates of its result tasks, applied once
+      // per successful partition (never from failed or retried attempts), so
+      // they count exactly what the write committed
+      val observed = Observation()
+      val shardStats = udaf(new ShardStats(shards), Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt))
+      val out = extract(input.where(shardOf.isin(wave: _*)), partitions)
         .withColumn("shard", shardOf)
-        .sortWithinPartitions("conv_id", "turn_idx") // P5 (prod-scale ordering)
+        .observe(observed,
+          shardStats(col("shard"), coalesce(length(col("extracted_text")), lit(0))).as("stats"))
+        // P5 (prod-scale ordering). The partitioned write needs `shard` order
+        // and would sort by it alone on top, dropping a (conv_id, turn_idx)
+        // sort below; leading with `shard` meets that need with one sort.
+        .sortWithinPartitions("shard", "conv_id", "turn_idx")
       io.writeShards(out, outDir)
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      // per-shard stats: one partition-pruned scan of the wave's output. An
-      // all-empty TABLE writes no partition directories (only _SUCCESS), which
-      // legitimately means 0 rows for every wave shard — detected EXPLICITLY
-      // from the partition listing, never by matching exception text (a read
-      // failure on a table with data is real corruption and must propagate,
-      // not be committed as 0-row done manifests).
-      val stats: Map[Int, (Long, Long)] =
-        if (io.shardsPresent(spark, outDir).isEmpty) Map.empty
-        else io.readOutputRaw(spark, outDir)
-          .where(col("shard").isin(wave: _*))
-          .groupBy(col("shard"))
-          .agg(count(lit(1)).as("rows"),
-            coalesce(sum(length(col("extracted_text"))), lit(0L)).as("bytes"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val stats = observed.get("stats").asInstanceOf[collection.Seq[Long]]
+      def rowsOf(k: Int): Long = stats(2 * k)
+      def bytesOf(k: Int): Long = stats(2 * k + 1)
       // per-shard wall_ms = the wave's wall split PROPORTIONALLY by bytes (the
       // extraction-cost driver), falling back to rows, then to an equal split
       // for all-empty waves. Cumulative allocation makes each wave's shard
@@ -250,10 +265,10 @@ object ExtractJob {
       // waveSize (a 4-shard wave no longer reports 4x the wall) and wave-level
       // wall is reconstructable as sum(wall_ms) group by wave_id.
       val weights: Seq[Long] = {
-        val bytes = wave.map(k => stats.getOrElse(k, (0L, 0L))._2)
+        val bytes = wave.map(bytesOf)
         if (bytes.sum > 0) bytes
         else {
-          val rows = wave.map(k => stats.getOrElse(k, (0L, 0L))._1)
+          val rows = wave.map(rowsOf)
           if (rows.sum > 0) rows else wave.map(_ => 1L)
         }
       }
@@ -268,9 +283,8 @@ object ExtractJob {
       def alloc(c: Long): Long =
         wallBig.multiply(java.math.BigInteger.valueOf(c)).divide(totBig).longValueExact()
       io.appendManifests(spark, outDir, wave.zipWithIndex.map { case (k, i) =>
-        val (rows, bytes) = stats.getOrElse(k, (0L, 0L))
         val share = alloc(cumW(i + 1)) - alloc(cumW(i))
-        PartManifest(k, SALT, rows, bytes, share, waveId, "done")
+        PartManifest(k, SALT, rowsOf(k), bytesOf(k), share, waveId, "done")
       })
       committed += wave.size
     }

@@ -25,22 +25,15 @@ trait TableIO {
     */
   def writeShards(out: DataFrame, outDir: String): Unit
 
-  /** The raw output table including the `shard` partition column. */
-  def readOutputRaw(spark: SparkSession, outDir: String): DataFrame
-
   def readOutput(spark: SparkSession, outDir: String): Dataset[ExtractedTurn]
   def appendManifests(spark: SparkSession, outDir: String, rows: Seq[PartManifest]): Unit
   def readManifests(spark: SparkSession, outDir: String): Dataset[PartManifest]
-  def manifestsExist(outDir: String): Boolean
 
-  /** Shard partitions physically present in the output table (Iceberg backend:
-    * the `.partitions` metadata table). Lets the wave-stats pass distinguish an
-    * all-empty table (nothing written yet — 0-row manifests are legitimate)
-    * from a corrupted/unreadable one (which must fail loudly, not be committed
-    * as done). Must work on ANY Hadoop filesystem the table lives on (HDFS/S3/
-    * local), not just java.io paths.
+  /** Whether any manifest was ever appended (resume reads none otherwise).
+    * Must work on ANY Hadoop filesystem the table lives on (`hdfs://`, `s3a://`,
+    * `file:` URIs as well as plain local paths), not just java.io paths.
     */
-  def shardsPresent(spark: SparkSession, outDir: String): Set[Int]
+  def manifestsExist(spark: SparkSession, outDir: String): Boolean
 }
 
 object ParquetTableIO extends TableIO {
@@ -55,9 +48,6 @@ object ParquetTableIO extends TableIO {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard")
       .parquet(s"$outDir/data")
-
-  def readOutputRaw(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/data")
 
   def readOutput(spark: SparkSession, outDir: String): Dataset[ExtractedTurn] = {
     import spark.implicits._
@@ -84,15 +74,8 @@ object ParquetTableIO extends TableIO {
     withWave.as[PartManifest]
   }
 
-  def manifestsExist(outDir: String): Boolean =
-    new java.io.File(s"$outDir/_manifests").exists()
-
-  def shardsPresent(spark: SparkSession, outDir: String): Set[Int] = {
-    val path = new org.apache.hadoop.fs.Path(s"$outDir/data")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Set.empty
-    else fs.listStatus(path).iterator
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
-      .map(_.getPath.getName.stripPrefix("shard=").toInt).toSet
+  def manifestsExist(spark: SparkSession, outDir: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(s"$outDir/_manifests")
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 }

@@ -1,8 +1,17 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.SpanSugar._
 import graft.core.{ExtractText, Pdf}
 import graft.html.HtmlBoilerplate
 
@@ -128,8 +137,23 @@ class HtmlSpec extends AnyFunSuite {
   }
 }
 
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually
+    with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
+
+  /** Every manifest's rows/bytes equal a groupBy(shard) re-read of the written
+    * table, the computation the observed write stats replaced.
+    */
+  private def assertManifestStatsMatchOutput(dir: String): Unit = {
+    val reread = spark.read.parquet(s"$dir/data").groupBy("shard")
+      .agg(count(lit(1)), coalesce(sum(length(col("extracted_text"))), lit(0L)))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val ms = ExtractJob.manifests(spark, dir).collect()
+    assert(reread.keySet.subsetOf(ms.map(_.part_id).toSet))
+    ms.foreach { m =>
+      assert((m.rows, m.bytes) == reread.getOrElse(m.part_id, (0L, 0L)), s"shard ${m.part_id}")
+    }
+  }
 
   test("golden gate: extraction matches expectations on the synthetic corpus") {
     import spark.implicits._
@@ -201,6 +225,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ms.length == 16, s"all shards must commit: ${ms.length}")
     assert(ms.forall(_.status == "done"))
     assert(ms.map(_.rows).sum == turns.count())
+    assertManifestStatsMatchOutput(dir)
     // idempotent rerun stays a no-op
     ExtractJob.runWithManifests(spark, turns, dir, shards = 16, partitions = 2)
     assert(ExtractJob.manifests(spark, dir).count() == 16)
@@ -258,7 +283,73 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ms = ExtractJob.manifests(spark, dir).collect()
     assert(ms.length == 6 && ms.forall(m => m.rows > 0 && m.wall_ms >= 0 && m.status == "done"))
     assert(ms.map(_.rows).sum == turns.count())
+    assertManifestStatsMatchOutput(dir)
     gen.unpersist(); turns.unpersist()
+  }
+
+  test("written files hold their rows in (conv_id, turn_idx) order (P5)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-order").toString
+    val gen = SynthGen.generate(spark, 40, 5, 1, 120, includeFixturePdfs = false)
+    // input in descending key order: only the write's own sort can order a file
+    val turns = spark.createDataset(SynthGen.turns(gen).collect().reverse.toSeq)
+    ExtractJob.runWithManifests(spark, turns, dir, shards = 4, partitions = 4)
+    // one small file is read whole, in order, by one task: its rows stay
+    // contiguous and in file order in the collected result
+    val rows = spark.read.parquet(s"$dir/data")
+      .select(input_file_name(), col("conv_id"), col("turn_idx")).collect()
+      .map(r => (r.getString(0), (r.getString(1), r.getInt(2))))
+    val files = rows.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+    assert(files.size > 1)
+    files.foreach { case (f, keys) => assert(keys == keys.sorted, s"$f is out of order") }
+  }
+
+  test("resume into a file: URI outDir commits each shard once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-uri").toUri.toString
+    assert(dir.startsWith("file:"))
+    val turns = SynthGen.turns(SynthGen.generate(spark, 20, 4, 0, 0, includeFixturePdfs = false))
+    ExtractJob.runWithManifests(spark, turns, dir, shards = 8, partitions = 2)
+    ExtractJob.runWithManifests(spark, turns, dir, shards = 8, partitions = 2)
+    val ms = ExtractJob.manifests(spark, dir).collect()
+    assert(ms.length == 8, s"a rerun must not recommit done shards: ${ms.length} manifests")
+    assert(ms.map(_.rows).sum == turns.count())
+    assert(ExtractJob.completedShards(spark, dir) == (0 until 8).toSet)
+  }
+
+  test("runWithManifests: one sort, no read-back, manifest stats equal the written table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plans").toString
+    val turns = SynthGen.turns(SynthGen.generate(spark, 20, 4, 0, 0, includeFixturePdfs = false))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+    }
+    def writesTo(qe: QueryExecution, sub: String): Boolean = qe.logical match {
+      case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toUri.getPath == s"$dir/$sub"
+      case _ => false
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ExtractJob.runWithManifests(spark, turns, dir, shards = 4, partitions = 4)
+      // the manifest append is the call's last query and the listener bus
+      // delivers in order, so every earlier plan has arrived once it has
+      eventually(timeout(30.seconds)) {
+        assert(plans.asScala.exists(writesTo(_, "_manifests")))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.asScala.toSeq
+    val readBack = all.filter { qe =>
+      collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
+        .exists(_.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(s"$dir/data")))
+    }
+    assert(readBack.isEmpty, s"${readBack.size} plan(s) scan $dir/data")
+    val writes = all.filter(writesTo(_, "data"))
+    assert(writes.size == 1)
+    val sorts = collect(writes.head.executedPlan) { case s: SortExec =>
+      s.sortOrder.map(_.child.asInstanceOf[Attribute].name)
+    }
+    assert(sorts == Seq(Seq("shard", "conv_id", "turn_idx")), writes.head.executedPlan.treeString)
+    assertManifestStatsMatchOutput(dir)
   }
 
   test("compaction: fewer files, identical data, manifests and resume state untouched") {
